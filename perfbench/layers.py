@@ -129,10 +129,10 @@ def per_layer(wl, recs, spans, event_dir, progress, window_s, windows_ms, cores)
         return _med(sum(s[field] for s in by_op[op] if s["name"] == name) for op in ops)
 
     model = spark_model(_read_event_log(event_dir))
-    from workloads import DedupCorpus, QueryWorkload, ReferenceQueries, SyncWorkload
+    from workloads import ReferenceQueries, SyncWorkload
 
     is_sync = isinstance(wl, SyncWorkload)
-    is_query = isinstance(wl, QueryWorkload)
+    is_query = isinstance(wl, ReferenceQueries)
     out: dict[str, dict] = {}
 
     def put(name, value, unit, base=None, n=len(ops)):
@@ -183,7 +183,7 @@ def per_layer(wl, recs, spans, event_dir, progress, window_s, windows_ms, cores)
     put("merge.spill_bytes",
         sum(_sum(model, _jobs_of(model, op, "sync.store_write"), "spill") for op in ops), "B")
 
-    for q in ReferenceQueries.QUERIES + DedupCorpus.QUERIES:
+    for q in ReferenceQueries.QUERIES + ReferenceQueries.DEDUP_QUERIES:
         mine = [r for r in recs if r.get("query") == q]
         put(f"query.{q}.build_s", _med(r["build_s"] for r in mine), "s", n=len(mine))
         put(f"query.{q}.run_s", _med(r["run_s"] for r in mine), "s", n=len(mine))
@@ -201,14 +201,14 @@ def per_layer(wl, recs, spans, event_dir, progress, window_s, windows_ms, cores)
     put("streaming.state_rows", _med(d[-1]["state_rows"] for d in ds), "count")
     put("streaming.state_memory_bytes", _med(d[-1]["state_memory_bytes"] for d in ds), "B")
 
-    is_dedup = isinstance(wl, DedupCorpus)
-    all_op_jobs = [j for op in ops for j in _jobs_of(model, op)]
-    passes = max(len(ops) // wl.ops_per_pass, 1)
-    put("dedup.task_cpu_s", _sum(model, all_op_jobs, "cpu_ns") / 1e9 / passes if is_dedup else 0, "s")
+    # per pass over the dedup queries: d1 and d16 together
+    dedup = [r["op"] for r in recs if r.get("query") in ReferenceQueries.DEDUP_QUERIES]
+    dedup_jobs = [j for op in dedup for j in _jobs_of(model, op)]
+    passes = max(len(dedup) // len(ReferenceQueries.DEDUP_QUERIES), 1)
+    put("dedup.task_cpu_s", _sum(model, dedup_jobs, "cpu_ns") / 1e9 / passes, "s", n=passes)
     put("dedup.shuffle_bytes",
-        (_sum(model, all_op_jobs, "sw") + _sum(model, all_op_jobs, "sr")) / passes if is_dedup else 0,
-        "B")
-    put("dedup.python_data_bytes", _sum(model, all_op_jobs, "py") / passes if is_dedup else 0, "B")
+        (_sum(model, dedup_jobs, "sw") + _sum(model, dedup_jobs, "sr")) / passes, "B", n=passes)
+    put("dedup.python_data_bytes", _sum(model, dedup_jobs, "py") / passes, "B", n=passes)
 
     win = [
         j for j, job in model["jobs"].items()

@@ -1,6 +1,6 @@
 """Run workloads untraced and traced, and print every metric.
 
-    python3 perfbench/report.py                       # every workload, seed 1
+    python3 perfbench/report.py                       # every workload in BENCHMARK.json, seed 1
     python3 perfbench/report.py --workloads sync-trickle --seeds 1-10 --no-trace
 
 Run from the root of a checkout. For each workload and seed it runs
@@ -22,9 +22,6 @@ import subprocess
 import sys
 
 import stats
-
-ALL_WORKLOADS = ["sync-trickle", "sync-bulk", "query-reference", "dedup-corpus"]
-
 
 def seeds(text: str) -> list[int]:
     out = []
@@ -80,7 +77,7 @@ def fmt(row: dict) -> str:
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("--workloads", default=",".join(ALL_WORKLOADS))
+    p.add_argument("--workloads", default=None, help="default: BENCHMARK.json's workloads")
     p.add_argument("--seeds", default="1")
     p.add_argument("--seconds", type=float, default=None)
     p.add_argument("--no-trace", action="store_true")
@@ -89,8 +86,9 @@ def main(argv=None) -> int:
     with open("BENCHMARK.json") as f:
         spec = json.load(f)
     seconds = args.seconds or spec["run_seconds"]
+    names = args.workloads.split(",") if args.workloads else [w["name"] for w in spec["workloads"]]
     report = {"seconds": seconds, "workloads": {}}
-    for wl in args.workloads.split(","):
+    for wl in names:
         plain = [run_one(wl, s, seconds, 0) for s in seeds(args.seeds)]
         entry = {
             "settings": plain[0]["settings"],

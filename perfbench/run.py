@@ -9,14 +9,19 @@ JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
 of the run by name, with unit and sample count; the whole result is also
 written to ``.perfbench_out/<workload>-s<seed>-t<trace>.json``.
 
-A run sets up three times (``setup_s`` is their median) and measures in
-two halves of ``--seconds / 2``: one after the first set-up and its
-warm-up, one after the third set-up.
+A run sets up three times, warms up untimed, and measures for
+``--seconds`` on the third set-up's store. Every store a set-up builds
+is checked, and so is the state the timed window leaves. The first
+set-up launches the JVM (``setup_cold_s``); the second and third build
+a new SparkContext in the running JVM, so ``setup_s``, the median of
+the three, is a warm-JVM figure.
 
 Run settings: Spark at ``local[nproc]`` (``SPARK_GRAFT_CPUS`` is set from
 the CPUs this process may use), ``PYTHONPATH`` exported to the Python
-workers, a 2 GB driver heap, and Spark's scratch, Python's temp files and
-all inputs under ``.perfbench_work/`` in the checkout, removed at exit.
+workers, a 2 GB driver heap (``SPARK_GRAFT_DRIVER_MEM`` is forced to
+``DRIVER_MEM``; see perfbench/PREDICTIONS.md for why), and Spark's
+scratch, Python's temp files and all inputs under ``.perfbench_work/``
+in the checkout, removed at exit.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 SETUP_REPS = 3
-MAX_OPS = 100_000
+DRIVER_MEM = "2g"
 TIME_LIMIT_S = 170  # a run that has not finished by then stops and fails
 
 
@@ -53,6 +58,13 @@ def _terminated(signum, frame):
 def load1() -> float:
     with open("/proc/loadavg") as f:
         return float(f.read().split()[0])
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the host so far, from /proc/stat."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return (fields[7] if len(fields) > 7 else 0), sum(fields)
 
 
 def vm_hwm_mb(pid: int) -> float:
@@ -97,7 +109,7 @@ def prepare_env(root: str, work: str) -> dict:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [root] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
@@ -111,7 +123,6 @@ def prepare_env(root: str, work: str) -> dict:
     return {
         "nproc": cpus,
         "master": f"local[{cpus}]",
-        "driver_memory": os.environ["SPARK_GRAFT_DRIVER_MEM"],
         "pythonpath": os.environ["PYTHONPATH"],
         "tmp": tmp,
     }
@@ -214,12 +225,14 @@ def run(args, root: str, work: str) -> dict:
             return None
 
     def timed(seconds: float) -> int:
-        """Whole passes until ``seconds`` have elapsed; returns the
-        number of operations attempted."""
+        """Whole passes, ending at the pass boundary nearest to
+        ``seconds`` elapsed; returns the number of operations attempted."""
         n = 0
         t_start, e_start = time.perf_counter(), time.time()
+        steal0, total0 = cpu_ticks()
         deadline = t_start + seconds
         for one_pass in wl.passes():
+            t_pass = time.perf_counter()
             for _name, fn in one_pass:
                 op = f"op{next(op_ids)}"
                 rec = run_op(op, fn)
@@ -227,25 +240,28 @@ def run(args, root: str, work: str) -> dict:
                 if rec is not None:
                     rec["op"] = op
                     recs.append(rec)
-            if time.perf_counter() >= deadline or n >= MAX_OPS:
+            now = time.perf_counter()
+            if now + (now - t_pass) / 2 >= deadline:
                 break
         windows.append((e_start, time.time()))
+        steal1, total1 = cpu_ticks()
+        # CPU time the hypervisor gave to other guests: noise the
+        # figures cannot control for, recorded to explain outliers
+        settings["steal_share_window"] = (steal1 - steal0) / max(total1 - total0, 1)
         tracer.op = "check"
         return n
 
-    # The timed window is split in two halves, before and after the
-    # second and third set-ups, so that one run samples the host's speed
-    # at two moments some seconds apart.
-    set_up(0)
+    checks: list[dict] = []
+    for rep in range(SETUP_REPS):
+        set_up(rep)
+        checks += wl.check()
+    settings["driver_memory"] = ctx.spark.conf.get("spark.driver.memory")
     t_warm = time.perf_counter()
     wl.warm(run_op)
     phases["warm_s"] = time.perf_counter() - t_warm
     mark = layers.settle(progress) if args.trace else 0
-    attempted = timed(args.seconds / 2)
-    checks = wl.check()
-    for rep in range(1, SETUP_REPS):
-        set_up(rep)
-    attempted += timed(args.seconds / 2)
+    attempted = timed(args.seconds)
+    streaming = progress[mark : layers.settle(progress)] if args.trace else []
     t_check = time.perf_counter()
     checks += wl.check()
     phases["check_s"] = time.perf_counter() - t_check
@@ -255,7 +271,6 @@ def run(args, root: str, work: str) -> dict:
     jvm = ctx.spark.sparkContext._gateway.proc
     if jvm is not None:
         rss += vm_hwm_mb(jvm.pid)
-    streaming = progress[mark : layers.settle(progress)] if args.trace else []
     t_stop = time.perf_counter()
     stop_jvm()
     tracer.uninstall()
@@ -265,6 +280,7 @@ def run(args, root: str, work: str) -> dict:
     e2e = {
         "setup_s": {"value": stats.median(setup_s), "unit": "s", "n": len(setup_s),
                     "samples": setup_s},
+        "setup_cold_s": {"value": setup_s[0], "unit": "s", "n": 1},
         "peak_rss_mb": {"value": rss, "unit": "MB", "n": 1},
         "error_rate": {"value": error_rate, "unit": "ratio", "n": attempted},
         "ops_per_s": {"value": len(recs) / window_s, "unit": "1/s", "n": len(recs)},
@@ -345,7 +361,8 @@ def main(argv=None) -> int:
     st = result["settings"]
     print(f"{args.workload} settings seed={args.seed} nproc={st['nproc']} master={st['master']} "
           f"driver_memory={st['driver_memory']} load1_start={st['load1_start']} "
-          f"load1_end={st['load1_end']} window_s={result['window_s']:.3f}")
+          f"load1_end={st['load1_end']} steal_share_window={st['steal_share_window']:.3f} "
+          f"window_s={result['window_s']:.3f}")
     for name, m in {**result["e2e"], **result["per_layer"]}.items():
         extra = "".join(f" {k}={v}" for k, v in m.items() if k not in ("value", "unit", "samples"))
         print(f"{args.workload} {name} = {m['value']:.6g} {m['unit']}{extra}")

@@ -128,6 +128,21 @@ def test_store_with_one_corrupted_row_is_reported_failed(tmp_path, column):
     assert failed == 1 and error_rate > 0
 
 
+def test_query_reference_checks_its_store_and_reports_oracle_checks_once(tmp_path):
+    landing, gen_dir = _land_and_store(tmp_path)
+    path = os.path.join(gen_dir, "part-0.parquet")
+    pq.write_table(pq.read_table(path).slice(1), path)
+    wl = workloads.WORKLOADS["query-reference"]()
+    wl.landing = landing
+    wl.store = _Store(gen_dir)
+    wl.results = [{"name": "a3_count_filtered", "ok": True, "rows": 1, "expected_rows": 1}]
+    checks = wl.check()
+    assert [c["name"] for c in checks] == ["store", "a3_count_filtered"]
+    assert not checks[0]["ok"]
+    assert run.tally([], checks, attempted=11)[0] == 1
+    assert [c["name"] for c in wl.check()] == ["store"]
+
+
 def test_store_missing_a_row_is_reported_failed(tmp_path):
     landing, gen_dir = _land_and_store(tmp_path)
     path = os.path.join(gen_dir, "part-0.parquet")

@@ -4,19 +4,16 @@ starts an operation only after the previous one returned.
 - ``sync-trickle``: continuous mode. Each operation lands one delta file
   of 0.1% of the store's initial rows (half new keys, half updates to
   keys inserted in the last five waves) and calls ``sync.sync_table``.
-- ``sync-bulk``: catch-up. Each operation lands 20% of the store's
-  initial rows (half new keys, half updates to uniformly random keys)
-  and calls ``sync.sync_table``.
 - ``query-reference``: the reference's query surface through
   ``queries.REGISTRY`` over an ``events`` store that setup builds with
-  ``sync_table`` waves.
-- ``dedup-corpus``: the near-duplicate query family over a generated
-  ``documents`` corpus.
+  ``sync_table`` waves, plus two queries of the near-duplicate family
+  over a generated ``documents`` corpus.
 
 A workload provides ``setup`` (input generation and initial store
-build), ``passes`` (the closed-loop operations, one pass at a time),
-``check`` (correctness against DuckDB, outside the timed window) and
-``metrics`` (its end-to-end figures).
+build), ``warm`` (untimed operations before the timed window), ``passes``
+(the closed-loop operations, one pass at a time), ``check``
+(correctness against DuckDB, outside the timed window) and ``metrics``
+(its end-to-end figures).
 """
 
 from __future__ import annotations
@@ -42,12 +39,26 @@ def du(path: str) -> tuple[int, int]:
     return total, files
 
 
-class SyncWorkload:
+class StoreWorkload:
+    """An ``events`` store that ``sync_table`` builds from the parquet
+    files landed in ``self.landing``."""
+
+    def _store_check(self) -> dict:
+        self.current = self.store._current()
+        res = check.store_check(
+            os.path.join(self.landing, "*.parquet"), os.path.join(self.current, "*.parquet")
+        )
+        self.live_rows = res["rows"]
+        return {"name": "store", **res}
+
+
+class SyncWorkload(StoreWorkload):
     """Land a wave, then one ``sync_table`` call: one operation."""
 
-    def __init__(self, name: str, mode: str, n_rows: int, rate: float, warmup: int):
-        self.name = name
-        self.mode = mode
+    mode = "trickle"
+
+    def __init__(self, n_rows: int = 200_000, rate: float = 0.001, warmup: int = 3):
+        self.name = "sync-trickle"
         self.n_rows = n_rows
         self.rate = rate
         self.warmup = warmup
@@ -58,7 +69,8 @@ class SyncWorkload:
             "store_rows": self.n_rows,
             "rows_per_wave": gen.Waves(0, self.n_rows, self.rate, self.mode).rows_per_wave,
             "update_share": 0.5,
-            "update_keys": "inserted in the last 5 waves" if self.mode == "trickle" else "uniform",
+            "update_keys": "inserted in the last 5 waves",
+            "warmup_iterations": self.warmup,
         }
 
     def setup(self, ctx, work: str) -> None:
@@ -111,12 +123,7 @@ class SyncWorkload:
             yield [("sync", self.iteration)]
 
     def check(self) -> list[dict]:
-        self.current = self.store._current()
-        res = check.store_check(
-            os.path.join(self.landing, "*.parquet"), os.path.join(self.current, "*.parquet")
-        )
-        self.live_rows = res["rows"]
-        return [{"name": "store", **res}]
+        return [self._store_check()]
 
     def metrics(self, recs: list[dict], window_s: float) -> dict:
         lat = [r["latency"] for r in recs]
@@ -134,14 +141,68 @@ class SyncWorkload:
         }
 
 
-class QueryWorkload:
-    """One registry query call (build + noop write): one operation; a
-    pass runs every query once, in a fixed order."""
+class ReferenceQueries(StoreWorkload):
+    """One registry query call (build + noop write) is one operation; a
+    pass runs every query once, in a fixed order. ``events`` is the
+    store as sync leaves it: an initial load plus ``waves`` bulk sync
+    waves. ``documents`` is a corpus with planted duplicates."""
 
-    def __init__(self, name: str, queries: list[str]):
-        self.name = name
-        self.queries = queries
-        self.ops_per_pass = len(queries)
+    QUERIES = [
+        "a3_count_filtered",
+        "o2_topk_single_key",
+        "o3_topk_per_key",
+        "p9_filter_expr",
+        "a4_user_balance",
+        "a5_incremental_balance",
+        "t5_stateful_balance",
+        "w1_row_number_boundaries",
+        "c8_sync_lag",
+    ]
+    # operators.dedup, operators.incremental and functions.text
+    DEDUP_QUERIES = ["d1_dedup_exact", "d16_bloom_incremental_dedup"]
+
+    def __init__(self, n_rows: int = 30_000, waves: int = 1, rate: float = 0.05,
+                 n_docs: int = 200):
+        self.name = "query-reference"
+        self.queries = self.QUERIES + self.DEDUP_QUERIES
+        self.ops_per_pass = len(self.queries)
+        self.n_rows = n_rows
+        self.n_waves = waves
+        self.rate = rate
+        self.n_docs = n_docs
+        self.results: list[dict] = []
+
+    def describe(self) -> dict:
+        return {"initial_rows": self.n_rows, "sync_waves": self.n_waves, "wave_rate": self.rate,
+                "orders_rows": 15_000, "documents": self.n_docs,
+                "near_dup_share": gen.NEAR_DUP_SHARE, "exact_dup_share": gen.EXACT_DUP_SHARE}
+
+    def setup(self, ctx, work: str) -> None:
+        from pypgsync_spark import sync
+
+        self.ctx = ctx
+        self.landing = os.path.join(work, "landing")
+        self.store = sync.ParquetSyncedTable(ctx.spark, os.path.join(work, "store"))
+        gen.write(gen.initial_events(ctx.seed, self.n_rows),
+                  os.path.join(self.landing, "w00000.parquet"))
+        sync.sync_table(ctx.spark.read.parquet(self.landing), self.store, KEYS, VERSION)
+        waves = gen.Waves(ctx.seed, self.n_rows, self.rate, "bulk")
+        for w in range(1, self.n_waves + 1):
+            gen.write(waves.next(), os.path.join(self.landing, f"w{w:05d}.parquet"))
+            sync.sync_table(ctx.spark.read.parquet(self.landing), self.store, KEYS, VERSION)
+        self.sf_dir = os.path.join(work, "sf")
+        os.makedirs(self.sf_dir)
+        os.symlink(self.store._current(), os.path.join(self.sf_dir, "events.parquet"))
+        gen.write(gen.orders(ctx.seed), os.path.join(self.sf_dir, "orders.parquet"))
+        gen.write(gen.documents(ctx.seed, self.n_docs),
+                  os.path.join(self.sf_dir, "documents.parquet"))
+
+    def views(self) -> dict:
+        return {
+            "events": os.path.join(self.store._current(), "*.parquet"),
+            "orders": os.path.join(self.sf_dir, "orders.parquet"),
+            "documents": os.path.join(self.sf_dir, "documents.parquet"),
+        }
 
     def call(self, qname: str) -> dict:
         from pypgsync_spark.queries import REGISTRY
@@ -165,8 +226,6 @@ class QueryWorkload:
         against the query's DuckDB oracle: warm-up and correctness in one."""
         from pypgsync_spark.queries import REGISTRY
 
-        self.results = []
-
         def checked(q):
             res = check.result_check(
                 REGISTRY[q].fn(self.ctx.spark, self.sf_dir), REGISTRY[q].oracle, self.views()
@@ -177,107 +236,25 @@ class QueryWorkload:
             run_op(f"check.{q}", lambda q=q: checked(q))
 
     def check(self) -> list[dict]:
-        """The warm-up pass's checks, reported once."""
-        out, self.results = self.results, []
+        """The store against its landed rows, plus the checks of the
+        warm-up pass since the last call."""
+        out, self.results = [self._store_check(), *self.results], []
         return out
 
-
-class ReferenceQueries(QueryWorkload):
-    """The README's Q2/Q3 surface over the ``events`` table as sync
-    leaves it: an initial load plus ``waves`` bulk sync waves."""
-
-    QUERIES = [
-        "a3_count_filtered",
-        "o2_topk_single_key",
-        "o3_topk_per_key",
-        "p9_filter_expr",
-        "a4_user_balance",
-        "a5_incremental_balance",
-        "t5_stateful_balance",
-        "w1_row_number_boundaries",
-        "c8_sync_lag",
-    ]
-
-    def __init__(self, n_rows: int = 30_000, waves: int = 1, rate: float = 0.05):
-        super().__init__("query-reference", self.QUERIES)
-        self.n_rows = n_rows
-        self.n_waves = waves
-        self.rate = rate
-
-    def describe(self) -> dict:
-        return {"initial_rows": self.n_rows, "sync_waves": self.n_waves, "wave_rate": self.rate,
-                "orders_rows": 15_000}
-
-    def setup(self, ctx, work: str) -> None:
-        from pypgsync_spark import sync
-
-        self.ctx = ctx
-        landing = os.path.join(work, "landing")
-        self.store = sync.ParquetSyncedTable(ctx.spark, os.path.join(work, "store"))
-        gen.write(gen.initial_events(ctx.seed, self.n_rows), os.path.join(landing, "w00000.parquet"))
-        sync.sync_table(ctx.spark.read.parquet(landing), self.store, KEYS, VERSION)
-        waves = gen.Waves(ctx.seed, self.n_rows, self.rate, "bulk")
-        for w in range(1, self.n_waves + 1):
-            gen.write(waves.next(), os.path.join(landing, f"w{w:05d}.parquet"))
-            sync.sync_table(ctx.spark.read.parquet(landing), self.store, KEYS, VERSION)
-        self.sf_dir = os.path.join(work, "sf")
-        os.makedirs(self.sf_dir)
-        os.symlink(self.store._current(), os.path.join(self.sf_dir, "events.parquet"))
-        gen.write(gen.orders(ctx.seed), os.path.join(self.sf_dir, "orders.parquet"))
-
-    def views(self) -> dict:
-        return {
-            "events": os.path.join(self.store._current(), "*.parquet"),
-            "orders": os.path.join(self.sf_dir, "orders.parquet"),
-        }
-
     def metrics(self, recs: list[dict], window_s: float) -> dict:
-        return stats.timing("query", [r["latency"] for r in recs])
-
-
-class DedupCorpus(QueryWorkload):
-    QUERIES = [
-        "d1_dedup_exact",
-        "d3_minhash_lsh_pairs",
-        "d5_near_dup_components",
-        "d9_cluster_canonical",
-        "d17_lsh_index_screen",
-    ]
-
-    def __init__(self, n_docs: int = 200):
-        super().__init__("dedup-corpus", self.QUERIES)
-        self.n_docs = n_docs
-
-    def describe(self) -> dict:
-        return {"documents": self.n_docs, "near_dup_share": gen.NEAR_DUP_SHARE,
-                "exact_dup_share": gen.EXACT_DUP_SHARE}
-
-    def setup(self, ctx, work: str) -> None:
-        self.ctx = ctx
-        self.sf_dir = os.path.join(work, "sf")
-        gen.write(gen.documents(ctx.seed, self.n_docs), os.path.join(self.sf_dir, "documents.parquet"))
-
-    def views(self) -> dict:
-        return {"documents": os.path.join(self.sf_dir, "documents.parquet")}
-
-    def metrics(self, recs: list[dict], window_s: float) -> dict:
-        k = len(self.queries)
-        pass_s = [
-            sum(r["latency"] for r in recs[i : i + k]) for i in range(0, len(recs) - k + 1, k)
-        ]
         out = stats.timing("query", [r["latency"] for r in recs])
-        if pass_s:
-            out["docs_per_s"] = {
-                "value": self.n_docs / stats.median(pass_s),
-                "unit": "docs/s",
-                "n": len(pass_s),
-            }
+        dedup = [r for r in recs if r["query"] in self.DEDUP_QUERIES]
+        k = len(self.DEDUP_QUERIES)
+        pass_s = [sum(r["latency"] for r in dedup[i : i + k]) for i in range(0, len(dedup), k)]
+        out["docs_per_s"] = {
+            "value": self.n_docs / stats.median(pass_s),
+            "unit": "docs/s",
+            "n": len(pass_s),
+        }
         return out
 
 
 WORKLOADS = {
-    "sync-trickle": lambda: SyncWorkload("sync-trickle", "trickle", 200_000, 0.001, warmup=3),
-    "sync-bulk": lambda: SyncWorkload("sync-bulk", "bulk", 200_000, 0.2, warmup=2),
+    "sync-trickle": SyncWorkload,
     "query-reference": ReferenceQueries,
-    "dedup-corpus": DedupCorpus,
 }
