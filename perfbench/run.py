@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload sync-trickle --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload sync-trickle --seed 1 --seconds 18 --trace 0
 
 Run from the root of a checkout. The last line of standard output is one
 JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.

@@ -57,7 +57,7 @@ class SyncWorkload(StoreWorkload):
 
     mode = "trickle"
 
-    def __init__(self, n_rows: int = 200_000, rate: float = 0.001, warmup: int = 3):
+    def __init__(self, n_rows: int = 200_000, rate: float = 0.001, warmup: int = 5):
         self.name = "sync-trickle"
         self.n_rows = n_rows
         self.rate = rate
@@ -162,7 +162,7 @@ class ReferenceQueries(StoreWorkload):
     DEDUP_QUERIES = ["d1_dedup_exact", "d16_bloom_incremental_dedup"]
 
     def __init__(self, n_rows: int = 30_000, waves: int = 1, rate: float = 0.05,
-                 n_docs: int = 200):
+                 n_docs: int = 200, warm_passes: int = 1):
         self.name = "query-reference"
         self.queries = self.QUERIES + self.DEDUP_QUERIES
         self.ops_per_pass = len(self.queries)
@@ -170,12 +170,14 @@ class ReferenceQueries(StoreWorkload):
         self.n_waves = waves
         self.rate = rate
         self.n_docs = n_docs
+        self.warm_passes = warm_passes
         self.results: list[dict] = []
 
     def describe(self) -> dict:
         return {"initial_rows": self.n_rows, "sync_waves": self.n_waves, "wave_rate": self.rate,
                 "orders_rows": 15_000, "documents": self.n_docs,
-                "near_dup_share": gen.NEAR_DUP_SHARE, "exact_dup_share": gen.EXACT_DUP_SHARE}
+                "near_dup_share": gen.NEAR_DUP_SHARE, "exact_dup_share": gen.EXACT_DUP_SHARE,
+                "warm_passes": self.warm_passes}
 
     def setup(self, ctx, work: str) -> None:
         from pypgsync_spark import sync
@@ -223,7 +225,10 @@ class ReferenceQueries(StoreWorkload):
 
     def warm(self, run_op) -> None:
         """One untimed pass that collects every result and checks it
-        against the query's DuckDB oracle: warm-up and correctness in one."""
+        against the query's DuckDB oracle, then ``warm_passes`` untimed
+        passes of the timed kind. The first pass of the timed kind runs
+        about 25% slower than the steady state, the second about 5%
+        (JIT compilation in the JVM), so the window starts after it."""
         from pypgsync_spark.queries import REGISTRY
 
         def checked(q):
@@ -234,6 +239,9 @@ class ReferenceQueries(StoreWorkload):
 
         for q in self.queries:
             run_op(f"check.{q}", lambda q=q: checked(q))
+        for i, one_pass in zip(range(self.warm_passes), self.passes()):
+            for q, fn in one_pass:
+                run_op(f"warmup{i}.{q}", fn)
 
     def check(self) -> list[dict]:
         """The store against its landed rows, plus the checks of the
